@@ -187,7 +187,7 @@ SKEW_FACTOR = 300
 # b_llm_bm25's full-corpus work is exactly one tokenize + (doc, word)
 # count shuffle — the plan shape every text-index build shares — and
 # the 300× documents replica (~1.5M distinct docs, doc_ids disjoint
-# per replica) rides the existing sf0.1_x300 corpus, so the tier adds
+# per replica) rides the existing sf0.1 ×300 corpus, so the tier adds
 # no one-off build. The key is tagged "eager" (corpus stats are
 # harvested driver-side at build), so the timed unit is builder+count
 # — the same end-to-end work DuckDB's single oracle statement does.
@@ -231,7 +231,7 @@ GRAPH_FACTOR = 300
 # BMP encode → decode → integer aHash → 2-byte-hash collision count):
 # two Arrow-batched map-only passes plus one 15-bit-key shuffle, so
 # the claim under test is "per-row work is the codec; scaling is
-# embarrassing".  Rides the existing sf0.1_x300 corpus (documents
+# embarrassing".  Rides the existing sf0.1 ×300 corpus (documents
 # replicate there), so the tier adds no one-off build.  The DuckDB
 # twin predicts every bit arithmetically from the md5 hex — it does
 # NO codec work — so the ratio prices the full Python-codec round
@@ -660,6 +660,21 @@ def _budget_elapsed() -> float:
     """Wall-clock since start minus time slept waiting out contention."""
     return time.perf_counter() - _T0 - _RESETTLE_SLEEP
 
+
+# Entry guards of the trailing scale blocks, in _budget_elapsed()
+# seconds: a block starts only while the clock is below its guard.
+# Each is ALSO the deadline of the block before it (see
+# _interleaved_times), so "deadline == next block's guard" holds by
+# construction.
+GUARD_DEEP_S = 420
+GUARD_300_S = 720
+GUARD_1000_S = 1080
+GUARD_SKEW_S = 1500
+GUARD_RETRIEVAL_S = 1620
+GUARD_STREAM_S = 2100
+GUARD_MM_S = 2400
+GUARD_GRAPH_S = 2700
+
 # Short query aliases for the compact stdout line (legend also in
 # BENCH_FULL.json). The driver stores only the LAST 2000 chars of
 # stdout and parses the JSON found there — r7/r8's full result lines
@@ -984,14 +999,14 @@ def main() -> None:
         # completes — and records itself under "trial_shed"/`ts`.  In
         # any run that met the next guard the deadline never fired, so
         # clean-run methodology (min-of counts) is unchanged.
-        result["scale_probe"] = probe(SCALE_FACTOR, SCALE_MATCHED, deadline=420)
+        result["scale_probe"] = probe(SCALE_FACTOR, SCALE_MATCHED, deadline=GUARD_DEEP_S)
         # Soft wall-clock guard: a JSON line without the deep tier
         # beats no JSON line at all if the harness enforces a timeout
         # (first run per corpus regeneration pays ~2 min of one-off
         # scaled-corpus builds on top of the timed work).
-        if _budget_elapsed() < 420:
+        if _budget_elapsed() < GUARD_DEEP_S:
             result["scale_probe_deep"] = probe(SCALE2_FACTOR, SCALE2_MATCHED,
-                                               deadline=720)
+                                               deadline=GUARD_300_S)
         else:
             result["scale_probe_deep"] = {"skipped": "time budget"}
         # 300× AQE-on tier: the permanent 100 TB-story block. First
@@ -999,19 +1014,19 @@ def main() -> None:
         # (cached + fingerprinted after), so the guard is wider but
         # still bounded — a JSON line without this block beats no
         # JSON line.
-        if _budget_elapsed() < 720:
+        if _budget_elapsed() < GUARD_300_S:
             result["scale_probe_300"] = probe(SCALE3_FACTOR, SCALE3_MATCHED,
-                                              deadline=1080)
+                                              deadline=GUARD_1000_S)
         else:
             result["scale_probe_300"] = {"skipped": "time budget"}
         # 1000× tier: the deepest datapoint. First run per corpus
         # regeneration pays a ~14 GiB one-off build (cached after);
         # the guard keeps a budget-blown session emitting its JSON
         # line without the tier rather than nothing at all.
-        if _budget_elapsed() < 1080:
+        if _budget_elapsed() < GUARD_1000_S:
             result["scale_probe_1000"] = probe(
                 SCALE4_FACTOR, SCALE4_MATCHED, tables=SCALE4_TABLES,
-                deadline=1500,
+                deadline=GUARD_SKEW_S,
             )
         else:
             result["scale_probe_1000"] = {"skipped": "time budget"}
@@ -1021,24 +1036,24 @@ def main() -> None:
         # Guards widened r11 (+180 s): the topk family joined the two
         # deep tiers, adding ~3 min of timed trials ahead of these
         # blocks — the old cutoffs silently dropped the retrieval tier.
-        if _budget_elapsed() < 1500:
+        if _budget_elapsed() < GUARD_SKEW_S:
             from stellarsql_spark.scale import ensure_skewed_corpus
 
             result["scale_probe_skew"] = probe(
                 SKEW_FACTOR,
                 SKEW_MATCHED,
                 scaled_dir=ensure_skewed_corpus(spark, sf_dir, SKEW_FACTOR),
-                deadline=1620,
+                deadline=GUARD_RETRIEVAL_S,
             )
         else:
             result["scale_probe_skew"] = {"skipped": "time budget"}
         # Retrieval tier: BM25 over the 300× documents replica —
-        # reuses the sf0.1_x300 corpus the 300× tier just ensured,
+        # reuses the sf0.1 ×300 corpus the 300× tier just ensured,
         # so the incremental cost is only the timed trials.
-        if _budget_elapsed() < 1620:
+        if _budget_elapsed() < GUARD_RETRIEVAL_S:
             result["scale_probe_retrieval"] = probe(RETRIEVAL_FACTOR,
                                                     RETRIEVAL_MATCHED,
-                                                    deadline=2100)
+                                                    deadline=GUARD_STREAM_S)
         else:
             result["scale_probe_retrieval"] = {"skipped": "time budget"}
         # Streaming throughput probe (r8): every scale tier above is
@@ -1055,7 +1070,7 @@ def main() -> None:
         # ONLY sustained-socket / micro-batch evidence in the
         # artifact, so it gets the cheap-first slot (the mm-tier
         # precedent) and the graph tier absorbs the budget risk.
-        if _budget_elapsed() < 2100:
+        if _budget_elapsed() < GUARD_STREAM_S:
             result["stream_probe"] = _stream_throughput(spark, sf_dir, SCALE2_FACTOR)
             # Push-path twin (r9 VERDICT #7): the socket source's cost
             # beside the file-source figure above.
@@ -1089,7 +1104,7 @@ def main() -> None:
         else:
             result["stream_probe"] = {"skipped": "time budget"}
         # Multimodal tier (r14 VERDICT #4): the codec family's depth
-        # row — rides the sf0.1_x300 corpus the 300× tier ensured, so
+        # row — rides the sf0.1 ×300 corpus the 300× tier ensured, so
         # the incremental cost is only the timed trials (~1 min).
         # r15 ordering: stream BEFORE mm BEFORE graph, guards
         # 2100/2400/2700.  The blocks' guards must be staggered wider
@@ -1102,8 +1117,8 @@ def main() -> None:
         # #2); mm (~1 min) fits in the 2100→2400 window even when the
         # stream probe starts at its deadline; graph (the longest)
         # absorbs the residual risk, as before.
-        if _budget_elapsed() < 2400:
-            result["scale_probe_mm"] = probe(MM_FACTOR, MM_MATCHED, deadline=2700)
+        if _budget_elapsed() < GUARD_MM_S:
+            result["scale_probe_mm"] = probe(MM_FACTOR, MM_MATCHED, deadline=GUARD_GRAPH_S)
         else:
             result["scale_probe_mm"] = {"skipped": "time budget"}
         # Graph tier (r12 VERDICT #2): the iterative loop at depth on
@@ -1113,7 +1128,7 @@ def main() -> None:
         # must not starve behind it — see above) at min-of-5: each lpa
         # trial pair is ~30 s, so two fewer rounds save ~2-3 min while
         # the paired min-of protocol keeps absorbing the host waves.
-        if _budget_elapsed() < 2700:
+        if _budget_elapsed() < GUARD_GRAPH_S:
             from stellarsql_spark.scale import ensure_graph_corpus
 
             result["scale_probe_graph"] = probe(

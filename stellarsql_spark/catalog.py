@@ -58,28 +58,6 @@ def table_bytes(sf_dir: str, name: str) -> int:
     return os.path.getsize(p)
 
 
-def content_fingerprint(path: str) -> str:
-    """Change-detection fingerprint for a corpus path that derived
-    layouts (bucketed tables, hour layouts, multibatch splits) key
-    their rebuild markers on.
-
-    For a plain file: size + mtime_ns.  For a DIRECTORY corpus (a
-    multi-file parquet table), the directory inode's own size/mtime
-    misses in-place rewrites of same-named member files, so the
-    fingerprint is the sorted (name, size, mtime_ns) listing of the
-    contained data files instead (r10 ADVICE)."""
-    if os.path.isdir(path):
-        entries = []
-        for n in sorted(os.listdir(path)):
-            if n.startswith((".", "_")):  # _SUCCESS, .crc — not data
-                continue
-            st = os.stat(os.path.join(path, n))
-            entries.append(f"{n}:{st.st_size}:{st.st_mtime_ns}")
-        return f"{path}|{'|'.join(entries)}"
-    st = os.stat(path)
-    return f"{path}:{st.st_size}:{st.st_mtime_ns}"
-
-
 # Memoized relations per (Spark app, sf, table): the corpus is
 # read-only, so re-running spark.read.parquet per builder call only
 # repeats file listing + footer/schema analysis (~10-50 ms per table

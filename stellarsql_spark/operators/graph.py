@@ -36,6 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stellarsql_spark.artifacts import materialize
 from stellarsql_spark.catalog import load_table
 from stellarsql_spark.registry import register
 
@@ -1637,32 +1638,10 @@ GROUP BY 1, 2
 
 
 def ensure_edge_fold(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per corpus fingerprint) the three-batch edge
-    fold; returns the artifact root.  Serialized + markered like every
-    layout artifact (the C273 ensure's protocol)."""
-    from urllib.parse import urlparse
+    """Materialize the three-batch edge fold (``memb_b{b}/``,
+    ``edges_b{b}/`` parts under one artifact root); returns the root."""
 
-    from stellarsql_spark.catalog import content_fingerprint, table_path
-    from stellarsql_spark.sources.events_layout import (
-        _build_serialized,
-        _marker_ok,
-        _published_ok,
-    )
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    root = os.path.join(warehouse, f"graph_edge_fold_{tag}")
-    marker = os.path.join(root, "_EDGEFOLD_DONE")
-    fp = content_fingerprint(table_path(sf_dir, "events"))
-    published = tuple(
-        os.path.join(root, f"{kind}_b{b}")
-        for b in range(3)
-        for kind in ("memb", "edges")
-    )
-    if _marker_ok(marker, fp) and _published_ok(published):
-        return root
-
-    def _build() -> None:
+    def _build(root: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "user_id",
             "event_type",
@@ -1732,8 +1711,7 @@ def ensure_edge_fold(spark: SparkSession, sf_dir: str) -> str:
                 os.path.join(root, f"memb_b{b}")
             )
 
-    _build_serialized(root, marker, fp, _build, published=published)
-    return root
+    return materialize(spark, "graph_edge_fold", sf_dir, ("events",), _build)
 
 
 @register("b_graph_edges_fold", oracle=_EDGE_FOLD_ORACLE,

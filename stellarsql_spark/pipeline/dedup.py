@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stellarsql_spark.artifacts import materialize
 from stellarsql_spark.catalog import load_table
 from stellarsql_spark.registry import register
 
@@ -631,8 +632,8 @@ def b_llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # for each batch the pipeline (a) keep-min dedups within the batch,
 # (b) anti-joins the survivors against the standing hash-set artifact
 # ON DISK, (c) appends the survivors' hashes to produce the next
-# standing artifact — survivors and hash sets are parquet files under
-# the warehouse, fingerprint-markered like every layout artifact.  The
+# standing artifact — survivors and hash sets are parquet parts of one
+# artifact root (artifacts.materialize, like every layout artifact).  The
 # oracle recomputes the keeper set from the FULL table in one shot
 # (first batch containing a hash wins, min doc_id within it), so a
 # hash match proves fold == full recompute — the merge property that
@@ -658,40 +659,12 @@ SELECT batch_id, doc_id, text_hash, n_in_batch FROM (
 
 
 def ensure_dedup_hashset(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per corpus fingerprint) the three-batch
-    incremental-dedup run: per batch b ∈ {0,1,2},
-    ``<root>/surv_b{b}/`` holds that batch's cross-corpus survivors
-    and ``<root>/hashset_b{b}/`` the standing hash set AFTER folding
-    batch b in.  Serialized + markered like the serving rollups.
-    Returns the artifact root directory."""
-    from urllib.parse import urlparse
+    """Materialize the three-batch incremental-dedup run: per batch
+    b ∈ {0,1,2}, ``<root>/surv_b{b}/`` holds that batch's cross-corpus
+    survivors and ``<root>/hashset_b{b}/`` the standing hash set AFTER
+    folding batch b in.  Returns the artifact root directory."""
 
-    from stellarsql_spark.catalog import table_path
-    from stellarsql_spark.sources.events_layout import (
-        _build_serialized,
-        _marker_ok,
-        _published_ok,
-    )
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    root = os.path.join(warehouse, f"dedup_fold_{tag}")
-    marker = os.path.join(root, "_FOLD_DONE")
-    from stellarsql_spark.catalog import content_fingerprint
-
-    fp = content_fingerprint(table_path(sf_dir, "documents"))
-    # The marker vouches for all six published directories; verify
-    # each (not just the root) so a surv_b*/hashset_b* deleted
-    # independently of the marker triggers a rebuild (r12 ADVICE).
-    published = tuple(
-        os.path.join(root, f"{kind}_b{b}")
-        for b in range(3)
-        for kind in ("surv", "hashset")
-    )
-    if _marker_ok(marker, fp) and _published_ok(published):
-        return root
-
-    def _build() -> None:
+    def _build(root: str) -> None:
         d = load_table(spark, sf_dir, "documents").select(
             "doc_id",
             (F.col("doc_id") % 3).cast("int").alias("batch_id"),
@@ -739,8 +712,7 @@ def ensure_dedup_hashset(spark: SparkSession, sf_dir: str) -> str:
                 os.path.join(root, f"hashset_b{b}")
             )
 
-    _build_serialized(root, marker, fp, _build, published=published)
-    return root
+    return materialize(spark, "dedup_fold", sf_dir, ("documents",), _build)
 
 
 # --- bucketed standing-set incremental dedup (C284, r13 VERDICT #1) -----------
@@ -768,56 +740,22 @@ def ensure_standing_hashset_bucketed(spark: SparkSession, sf_dir: str) -> str:
     hashes fold in bucket-aligned (same Murmur3 hash mod N), touching
     only the buckets its hashes land in.
 
-    Same serialized fingerprint-marker protocol + metadata-only
-    re-registration as every bucketed layout (r12 ADVICE)."""
-    from urllib.parse import urlparse
+    Built and registered by the one bucketed-table builder
+    (sources/bucketed._ensure_bucketed_table)."""
+    from stellarsql_spark.sources.bucketed import _ensure_bucketed_table
 
-    from stellarsql_spark.catalog import content_fingerprint, table_path
-    from stellarsql_spark.sources.bucketed import _recreate_over_location
-    from stellarsql_spark.sources.events_layout import _build_serialized, _marker_ok
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    name = f"dedup_hashset_bk_{tag}"
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    loc = os.path.join(warehouse, name)
-    marker = os.path.join(loc, "_BUCKETS_DONE")
-    fp = (
-        f"hs1:{content_fingerprint(table_path(sf_dir, 'documents'))}"
-        f":{N_HASHSET_BUCKETS}"
-    )
-    standing = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 3 != 0)
-        .select(F.md5(F.lower(F.trim(F.col("text")))).alias("text_hash"))
-        .distinct()
-    )
-    if not _marker_ok(marker, fp):
-
-        def _build() -> None:
-            import shutil
-
-            if spark.catalog.tableExists(name):
-                spark.sql(f"DROP TABLE {name}")
-            shutil.rmtree(loc, ignore_errors=True)
-            # repartition by the bucket key first → ONE file per bucket
-            # (same Murmur3 assignment) — the only layout where Spark
-            # trusts the per-bucket sortBy order at read time, so the
-            # anti-join SMJ skips the standing-side sort too.
-            (
-                standing.repartition(N_HASHSET_BUCKETS, F.col("text_hash"))
-                .write.bucketBy(N_HASHSET_BUCKETS, "text_hash")
-                .sortBy("text_hash")
-                .mode("overwrite")
-                .saveAsTable(name)
-            )
-
-        _build_serialized(loc, marker, fp, _build)
-    if not spark.catalog.tableExists(name):
-        _recreate_over_location(
-            spark, name, standing, "text_hash", N_HASHSET_BUCKETS, loc,
-            sorted_by="text_hash",
+    def standing():
+        return (
+            load_table(spark, sf_dir, "documents")
+            .where(F.col("doc_id") % 3 != 0)
+            .select(F.md5(F.lower(F.trim(F.col("text")))).alias("text_hash"))
+            .distinct()
         )
-    return name
+
+    return _ensure_bucketed_table(
+        spark, sf_dir, "dedup_hashset_bk", ("documents",), standing,
+        "text_hash", N_HASHSET_BUCKETS, sorted_by="text_hash",
+    )
 
 
 @register("b_llm_dedup_incremental_bucketed", oracle=_INCR_DEDUP_ORACLE,

@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from stellarsql_spark.artifacts import materialize
 from stellarsql_spark.catalog import load_table
 from stellarsql_spark.pipeline.similarity import (
     _EMBDUP_ORACLE,
@@ -1214,7 +1215,7 @@ def b_llm_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vectors (300×) with warm == cold — compute-bound on the ENCODE
 # (the |corpus|×M_SUB×K_CODE argmin), which in production is a
 # ONE-TIME at-rest build, not a per-query cost.  This key lands the
-# codes + codebook as fingerprint-markered parquet artifacts (the same
+# codes + codebook as one parquet artifact (artifacts.materialize; the same
 # lineage step as every served twin) so query time pays only the ADC:
 # broadcast LUT → code-lookup join → M_SUB-row sum → top-k.
 _PQ_SERVED_ORACLE = f"""
@@ -1277,33 +1278,13 @@ WHERE rn <= {TOP_K}
 
 
 def ensure_pq_codes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Materialize (once per corpus fingerprint) the C265 PQ encode:
-    ``<warehouse>/pq_codes_<tag>/`` (vec_id, j, code — ≈4 B/vector of
-    payload) and ``<warehouse>/pq_codebook_<tag>/`` (M_SUB×K_CODE
-    centroid subvectors).  Same fingerprint-marker + exclusive-lock
-    protocol as the other serving artifacts."""
-    from urllib.parse import urlparse
+    """Materialize the C265 PQ encode:
+    ``<warehouse>/pq_<tag>/codes/`` (vec_id, j, code — ≈4 B/vector of
+    payload) and ``<warehouse>/pq_<tag>/codebook/`` (M_SUB×K_CODE
+    centroid subvectors), both parts of one artifact root.  Returns
+    (codes_dir, codebook_dir)."""
 
-    from stellarsql_spark.catalog import content_fingerprint, table_path
-    from stellarsql_spark.sources.events_layout import _build_serialized, _marker_ok
-
-    from stellarsql_spark.sources.events_layout import _published_ok
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    codes_dir = os.path.join(warehouse, f"pq_codes_{tag}")
-    cb_dir = os.path.join(warehouse, f"pq_codebook_{tag}")
-    marker = os.path.join(codes_dir, "_PQ_DONE")
-    fp = content_fingerprint(table_path(sf_dir, "embeddings"))
-    # The marker lives in codes_dir but vouches for BOTH published
-    # directories — the fast path must verify the companion codebook
-    # too, or a cb_dir deleted independently of the marker would serve
-    # a missing artifact (r12 ADVICE).
-    published = (codes_dir, cb_dir)
-    if _marker_ok(marker, fp) and _published_ok(published):
-        return codes_dir, cb_dir
-
-    def _build() -> None:
+    def _build(out: str) -> None:
         q = _int8_grid(load_table(spark, sf_dir, "embeddings"))
         assign, _, sub = _pq_parts(q)
         code_book = sub.where(F.col("vec_id") < K_CODE).select(
@@ -1311,11 +1292,11 @@ def ensure_pq_codes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             F.col("vec_id").alias("cid"),
             F.col("sv").alias("cv"),
         )
-        code_book.write.mode("overwrite").parquet(cb_dir)
-        assign.write.mode("overwrite").parquet(codes_dir)
+        code_book.write.mode("overwrite").parquet(os.path.join(out, "codebook"))
+        assign.write.mode("overwrite").parquet(os.path.join(out, "codes"))
 
-    _build_serialized(codes_dir, marker, fp, _build, published=published)
-    return codes_dir, cb_dir
+    root = materialize(spark, "pq", sf_dir, ("embeddings",), _build)
+    return os.path.join(root, "codes"), os.path.join(root, "codebook")
 
 
 @register("b_llm_pq_adc_served", oracle=_PQ_SERVED_ORACLE,
@@ -2014,12 +1995,12 @@ def _ivfpq_served_oracle(iters: int = COARSE_ITERS) -> str:
 
 
 def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    """Materialize (once per corpus fingerprint) the FULL IVF-PQ index
-    at rest — what a faiss IVF-PQ index file holds, as parquet:
+    """Materialize the FULL IVF-PQ index at rest — what a faiss
+    IVF-PQ index file holds, as parquet:
 
-    ``<warehouse>/ivfpq_cents_<tag>/``  the K_COARSE trained coarse
+    ``<warehouse>/ivfpq_<tag>/cents/``  the K_COARSE trained coarse
         centroids (cid, cvec) — the quantizer queries probe against.
-    ``<warehouse>/ivfpq_codes_<tag>/cell=<c>/``  every vector's PQ
+    ``<warehouse>/ivfpq_<tag>/codes/cell=<c>/``  every vector's PQ
         codes (vec_id, j, code) PARTITIONED BY ITS IVF CELL — the
         inverted lists.  Cell-partitioning is the layout point: a
         probe reads only the probed cells' directories (partition
@@ -2029,30 +2010,13 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]
     (ensure_pq_codes — the composed key scores with the same
     raw-vector codebook as plain PQ-ADC).
 
-    Same fingerprint-marker + exclusive-lock + published-set protocol
-    as every serving artifact; returns (cents_dir, codes_dir, cb_dir).
+    Centroids and codes are parts of one artifact root; returns
+    (cents_dir, codes_dir, cb_dir).
     """
-    from urllib.parse import urlparse
-
-    from stellarsql_spark.catalog import content_fingerprint, table_path
-    from stellarsql_spark.sources.events_layout import (
-        _build_serialized,
-        _marker_ok,
-        _published_ok,
-    )
-
     pq_codes_dir, cb_dir = ensure_pq_codes(spark, sf_dir)
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    cents_dir = os.path.join(warehouse, f"ivfpq_cents_{tag}")
-    codes_dir = os.path.join(warehouse, f"ivfpq_codes_{tag}")
-    marker = os.path.join(codes_dir, "_IVFPQ_DONE")
-    fp = content_fingerprint(table_path(sf_dir, "embeddings"))
-    published = (cents_dir, codes_dir)
-    if _marker_ok(marker, fp) and _published_ok(published):
-        return cents_dir, codes_dir, cb_dir
 
-    def _build() -> None:
+    def _build(out: str) -> None:
+        cents_dir, codes_dir = os.path.join(out, "cents"), os.path.join(out, "codes")
         q = _int8_grid(load_table(spark, sf_dir, "embeddings"))
         _coarse_centroids(q).coalesce(1).write.mode("overwrite").parquet(cents_dir)
         # assign against the MATERIALIZED centroids (read back), so the
@@ -2069,8 +2033,10 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]
             .parquet(codes_dir)
         )
 
-    _build_serialized(codes_dir, marker, fp, _build, published=published)
-    return cents_dir, codes_dir, cb_dir
+    root = materialize(
+        spark, "ivfpq", sf_dir, ("embeddings", os.path.dirname(pq_codes_dir)), _build
+    )
+    return os.path.join(root, "cents"), os.path.join(root, "codes"), cb_dir
 
 
 @register("b_llm_ivfpq_served", oracle=_ivfpq_served_oracle(),
@@ -2157,42 +2123,25 @@ def b_llm_ivfpq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ensure_ivfpq_residual_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str, str]:
-    """Materialize (once per corpus fingerprint) the RESIDUAL IVF-PQ
-    index — the faiss-default ``by_residual`` layout at rest:
+    """Materialize the RESIDUAL IVF-PQ index — the faiss-default
+    ``by_residual`` layout at rest:
 
-    ``<warehouse>/ivfpq_cents_<tag>/``  shared with C281: the same
+    ``<warehouse>/ivfpq_<tag>/cents/``  shared with C281: the same
         trained coarse quantizer (ensure_ivfpq_index builds it; the
         residual index reuses it verbatim, exactly as one faiss index
         shares its quantizer across encodings).
-    ``<warehouse>/ivfpqr_codebook_<tag>/``  the TRAINED residual
+    ``<warehouse>/ivfpqr_<tag>/codebook/``  the TRAINED residual
         codebook (CB_ITERS integer-grid Lloyd rounds on residual
         subvectors).
-    ``<warehouse>/ivfpqr_codes_<tag>/cell=<c>/``  every vector's
+    ``<warehouse>/ivfpqr_<tag>/codes/cell=<c>/``  every vector's
         residual PQ codes, partitioned by IVF cell (the inverted
         lists).
 
     Returns (cents_dir, codes_dir, codebook_dir)."""
-    from urllib.parse import urlparse
-
-    from stellarsql_spark.catalog import content_fingerprint, table_path
-    from stellarsql_spark.sources.events_layout import (
-        _build_serialized,
-        _marker_ok,
-        _published_ok,
-    )
-
     cents_dir, _, _ = ensure_ivfpq_index(spark, sf_dir)
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    rcb_dir = os.path.join(warehouse, f"ivfpqr_codebook_{tag}")
-    rcodes_dir = os.path.join(warehouse, f"ivfpqr_codes_{tag}")
-    marker = os.path.join(rcodes_dir, "_IVFPQR_DONE")
-    fp = content_fingerprint(table_path(sf_dir, "embeddings"))
-    published = (rcb_dir, rcodes_dir)
-    if _marker_ok(marker, fp) and _published_ok(published):
-        return cents_dir, rcodes_dir, rcb_dir
 
-    def _build() -> None:
+    def _build(out: str) -> None:
+        rcb_dir, rcodes_dir = os.path.join(out, "codebook"), os.path.join(out, "codes")
         q = _int8_grid(load_table(spark, sf_dir, "embeddings"))
         cents = spark.read.parquet(cents_dir)
         af = _nearest_cells(q.select("vec_id", "qv"), cents, 1)
@@ -2212,8 +2161,10 @@ def ensure_ivfpq_residual_index(
             .parquet(rcodes_dir)
         )
 
-    _build_serialized(rcodes_dir, marker, fp, _build, published=published)
-    return cents_dir, rcodes_dir, rcb_dir
+    root = materialize(
+        spark, "ivfpqr", sf_dir, ("embeddings", os.path.dirname(cents_dir)), _build
+    )
+    return cents_dir, os.path.join(root, "codes"), os.path.join(root, "codebook")
 
 
 @register("b_llm_ivfpq_residual_served", oracle=_ivfpq_residual_served_oracle(),

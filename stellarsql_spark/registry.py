@@ -171,18 +171,10 @@ _R02_CHECKED = frozenset(
 _RESTAMP: tuple[str, ...] = (
     # (r8's b_sample_seeded hash-oracle upgrade was re-stamped green
     # in CORRECTNESS_r10 and was dropped per the removal rule above;
-    # empty r11–r14.)
-    # r15 (VERDICT #6): the keys whose code or oracle text the two
-    # optimization rounds touched, so the driver's r15 window stamps
-    # them first — r14's rotation missed all of them.  Drop each once
-    # its CORRECTNESS_r15 row is green.
-    "b_topk_per_group",            # r14 packed-long kernel + repartition-first
-    "b_topk_per_group_bucketed",   # shares the packed kernel (zero-exchange twin)
-    "b_topk_per_group_served",     # rollup artifact rebuilt under the r15 fingerprint token
-    "b_tpch_q3",                   # r14 shuffle_hash hint; r15 size-chooser (base lane at driver tier)
-    "b_graph_label_prop_converged",  # r15 oracle-text pin (AS MATERIALIZED; rows identical)
-    "b_graph_pagerank_minute",         # r15 pre-partitioned persisted edge list
-    "b_graph_pagerank_minute_served",  # shares _pr_minute_loop
+    # empty r11–r14.  r15's seven entries — the topk trio, b_tpch_q3,
+    # b_graph_label_prop_converged and the two minute-PageRank keys —
+    # were all re-stamped green in CORRECTNESS_r15 and are dropped per
+    # the same rule.)
 )
 
 

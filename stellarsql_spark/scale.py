@@ -10,18 +10,20 @@ evidence is a measured LARGER run: this module replicates the corpus
 the overhead story is true. bench.py runs the matched headline
 queries at both scales and publishes the ratio.
 
-Replicas are written once under ``<repo>/.scale/`` (gitignored) and
-fingerprinted against the base corpus, so repeated bench runs reuse
-them.
+Replicas are written once under ``<repo>/.scale/`` (gitignored) as
+artifacts (``artifacts.materialize``: keyed on every base table and on
+the replication code), so repeated bench runs reuse them.
 """
 
 from __future__ import annotations
 
 import os
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stellarsql_spark.artifacts import materialize
 from stellarsql_spark.catalog import TABLES, load_table, table_path
 
 # Key stride between replicas — larger than any key in the corpora
@@ -31,8 +33,9 @@ STRIDE = 10_000_000
 
 # id columns shifted per replica; tables absent here (region, nation)
 # are genuine fixed-size dimensions and are copied once, unshifted —
-# the same thing TPC-H does at higher scale factors.
-_SHIFT_COLS: dict[str, tuple[str, ...]] = {
+# the same thing TPC-H does at higher scale factors.  Read-only, so
+# the artifact code digest counts it as a constant.
+_SHIFT_COLS = MappingProxyType({
     "customer": ("c_custkey",),
     "supplier": ("s_suppkey",),
     "part": ("p_partkey",),
@@ -41,35 +44,7 @@ _SHIFT_COLS: dict[str, tuple[str, ...]] = {
     "events": ("event_id", "user_id"),
     "documents": ("doc_id",),
     "embeddings": ("vec_id",),
-}
-
-
-def _base_fingerprint(
-    base_sf_dir: str, factor: int, tables: tuple[str, ...] | None = None
-) -> str:
-    # "v3": layout version — v2→v3 bumped when target-file sizing
-    # switched from compressed bytes to DECODED Arrow bytes (see
-    # _est_scan_bytes): replicated text compresses ~100:1 inside a
-    # file, and the compressed-bytes formula gave documents@300× FIVE
-    # single-row-group files — a hard 5-task scan floor on 32 cores
-    # (the r7 cosine task-sizing bug, one level down, caught when the
-    # r8 retrieval probe measured BM25 6.6× DuckDB purely on scan
-    # parallelism). Bumping the tag invalidates every cached corpus
-    # ON PURPOSE so they rebuild with the row-group layout the rule
-    # requires.
-    # The tables segment is ALWAYS present (empty string for the full
-    # corpus): adding it in r7 was a one-time cache invalidation, and
-    # every cache on disk now carries the 3-segment prefix — making
-    # the segment conditional again would re-invalidate them, so the
-    # unconditional form is the stable one (r8 ADVICE adjudication).
-    parts = ["v3", str(factor), ",".join(sorted(tables or ()))]
-    for t in TABLES:
-        # driver base tables are single read-only files, so size+mtime
-        # is exact here; keeping the historical format preserves every
-        # cached .scale corpus (format changes force full rebuilds)
-        st = os.stat(table_path(base_sf_dir, t))
-        parts.append(f"{t}:{st.st_size}:{st.st_mtime_ns}")
-    return "|".join(parts)
+})
 
 
 _SCAN_BYTES_CACHE: dict[tuple[str, int], int] = {}
@@ -119,6 +94,45 @@ def replicate_table(df: DataFrame, name: str, factor: int) -> DataFrame:
     return out.drop("_replica")
 
 
+def _scale_root(out_root: str | None) -> str:
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return out_root or os.path.join(repo, ".scale")
+
+
+def _write_corpus(spark, base_sf_dir: str, out: str, factor_of, scale=replicate_table) -> None:
+    """Write every base table ``factor_of(t)``× into ``out`` through
+    ``scale(base, t, t_factor)``.
+
+    One file per ~32 MiB of estimated DECODED output (Arrow bytes —
+    see _est_scan_bytes), like a real lake's many-file layout.  This
+    is a measured fix (round 6, re-fixed in round 8 when
+    compressed-bytes sizing resurfaced on text): the single-file
+    writer produced orders@300× as ONE 500 MiB file with FOUR 12M-row
+    row groups, capping Spark's scan at 4-way parallelism on 32 cores
+    (b_join_inner 3.8 s; DuckDB, which parallelizes inside a row
+    group, was unaffected). File-level parallelism is the layout knob
+    a 100 TB lake actually has — maxPartitionBytes can't split below
+    row-group granularity.
+
+    Parallelize the EXPLOSION, not its output: the small base table
+    is repartitioned into n_files slices BEFORE the replica
+    cross-join, so each task independently explodes and writes its
+    slice ×factor — the only shuffle is the megabyte-sized base table
+    (a post-explosion repartition would funnel the full factor×
+    volume through one single-task shuffle write: measured 16+ min
+    for lineitem@300× vs ~2 min this way)."""
+    for t in TABLES:
+        t_factor = factor_of(t)
+        est_bytes = _est_scan_bytes(table_path(base_sf_dir, t)) * t_factor
+        n_files = int(max(1, min(512, est_bytes // (32 << 20))))
+        base = load_table(spark, base_sf_dir, t)
+        if n_files > 1:
+            base = base.repartition(n_files)
+        scale(base, t, t_factor).write.mode("overwrite").parquet(
+            os.path.join(out, f"{t}.parquet")
+        )
+
+
 def ensure_scaled_corpus(
     spark: SparkSession,
     base_sf_dir: str,
@@ -132,51 +146,15 @@ def ensure_scaled_corpus(
     still copied at base size so every view registers) — the 1000×
     tier replicates only the five tables its probe queries touch,
     which keeps the one-off build at ~14 GiB instead of ~60 GiB."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tag = os.path.basename(base_sf_dir.rstrip("/"))
-    suffix = f"_x{factor}" if tables is None else f"_x{factor}p{len(tables)}"
-    out_dir = os.path.join(out_root or os.path.join(repo, ".scale"), f"{tag}{suffix}")
-    marker = os.path.join(out_dir, "_SCALED_DONE")
-    fingerprint = _base_fingerprint(base_sf_dir, factor, tables)
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read() == fingerprint:
-                return out_dir
-    import shutil
+    name = f"x{factor}" if tables is None else f"x{factor}p{len(tables)}"
 
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
-    for t in TABLES:
-        t_factor = factor if (tables is None or t in tables) else 1
-        scaled = replicate_table(load_table(spark, base_sf_dir, t), t, t_factor)
-        # One file per ~32 MiB of estimated DECODED output (Arrow
-        # bytes — see _est_scan_bytes), like a real lake's many-file
-        # layout. This is a measured fix (round 6, re-fixed in round
-        # 8 when compressed-bytes sizing resurfaced on text): the
-        # single-file writer produced orders@300× as ONE 500 MiB file
-        # with FOUR 12M-row row groups, capping Spark's scan at 4-way
-        # parallelism on 32 cores (b_join_inner 3.8 s; DuckDB, which
-        # parallelizes inside a row group, was unaffected). File-level
-        # parallelism is the layout knob a 100 TB lake actually has —
-        # maxPartitionBytes can't split below row-group granularity.
-        est_bytes = _est_scan_bytes(table_path(base_sf_dir, t)) * t_factor
-        n_files = int(max(1, min(512, est_bytes // (32 << 20))))
-        if n_files > 1:
-            # Parallelize the EXPLOSION, not its output: repartition
-            # the small base table into n_files slices BEFORE the
-            # replica cross-join, so each task independently explodes
-            # and writes its slice ×factor — the only shuffle is the
-            # megabyte-sized base table (a post-explosion repartition
-            # would funnel the full factor× volume through one
-            # single-task shuffle write: measured 16+ min for
-            # lineitem@300× vs ~2 min this way).
-            scaled = replicate_table(
-                load_table(spark, base_sf_dir, t).repartition(n_files), t, t_factor
-            )
-        scaled.write.mode("overwrite").parquet(os.path.join(out_dir, f"{t}.parquet"))
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
+    def _build(out: str) -> None:
+        _write_corpus(
+            spark, base_sf_dir, out,
+            lambda t: factor if (tables is None or t in tables) else 1,
+        )
+
+    return materialize(spark, name, base_sf_dir, TABLES, _build, under=_scale_root(out_root))
 
 
 # --- zipfian-skew corpus (r8): real join-key skew at depth ----------
@@ -220,40 +198,22 @@ def ensure_skewed_corpus(
     (xxhash64 draw — no RNG stream, rebuilds are identical).
     Referential integrity holds: hot keys are existing replica-0
     orderkeys, cold rows keep their original key."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tag = os.path.basename(base_sf_dir.rstrip("/"))
-    out_dir = os.path.join(out_root or os.path.join(repo, ".scale"), f"{tag}_x{factor}z")
-    marker = os.path.join(out_dir, "_SCALED_DONE")
-    fingerprint = (
-        _base_fingerprint(base_sf_dir, factor, ("orders", "lineitem"))
-        + f"|zipf:{ZIPF_HOT_KEYS}:{ZIPF_HOT_SHARE}"
-    )
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read() == fingerprint:
-                return out_dir
-    import shutil
 
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
-    hot = [
-        r[0]
-        for r in load_table(spark, base_sf_dir, "orders")
-        .select("o_orderkey")
-        .orderBy("o_orderkey")
-        .limit(ZIPF_HOT_KEYS)
-        .collect()
-    ]
-    thresholds = _zipf_thresholds()
-    for t in TABLES:
-        t_factor = factor if t in ("orders", "lineitem") else 1
-        est_bytes = _est_scan_bytes(table_path(base_sf_dir, t)) * t_factor
-        n_files = int(max(1, min(512, est_bytes // (32 << 20))))
-        base = load_table(spark, base_sf_dir, t)
-        if n_files > 1:
-            base = base.repartition(n_files)
-        scaled = replicate_table(base, t, t_factor)
-        if t == "lineitem":
+    def _build(out: str) -> None:
+        hot = [
+            r[0]
+            for r in load_table(spark, base_sf_dir, "orders")
+            .select("o_orderkey")
+            .orderBy("o_orderkey")
+            .limit(ZIPF_HOT_KEYS)
+            .collect()
+        ]
+        thresholds = _zipf_thresholds()
+
+        def skew(base: DataFrame, t: str, t_factor: int) -> DataFrame:
+            scaled = replicate_table(base, t, t_factor)
+            if t != "lineitem":
+                return scaled
             u = F.pmod(
                 F.xxhash64("l_orderkey", "l_linenumber", "l_partkey"),
                 F.lit(_ZIPF_RES),
@@ -261,11 +221,16 @@ def ensure_skewed_corpus(
             remap = F.col("l_orderkey")
             for j in range(ZIPF_HOT_KEYS - 1, -1, -1):
                 remap = F.when(u < thresholds[j], F.lit(hot[j])).otherwise(remap)
-            scaled = scaled.withColumn("l_orderkey", remap)
-        scaled.write.mode("overwrite").parquet(os.path.join(out_dir, f"{t}.parquet"))
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
+            return scaled.withColumn("l_orderkey", remap)
+
+        _write_corpus(
+            spark, base_sf_dir, out,
+            lambda t: factor if t in ("orders", "lineitem") else 1, skew,
+        )
+
+    return materialize(
+        spark, f"x{factor}z", base_sf_dir, TABLES, _build, under=_scale_root(out_root)
+    )
 
 
 # --- time-shifted graph corpus (r12 VERDICT #2): depth for the graph tier ----
@@ -294,52 +259,30 @@ def ensure_graph_corpus(
     """Build (or reuse) the ``factor``× TIME-SHIFTED events corpus for
     the graph depth tier; other tables are copied at base size so
     every view still registers."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tag = os.path.basename(base_sf_dir.rstrip("/"))
-    out_dir = os.path.join(out_root or os.path.join(repo, ".scale"), f"{tag}_x{factor}g")
-    marker = os.path.join(out_dir, "_SCALED_DONE")
-    # The ("events",) argument only tags WHICH table replicates; the
-    # size+mtime segments inside _base_fingerprint always cover EVERY
-    # base table (its `for t in TABLES` loop), so regenerating any
-    # copied table — not just events — invalidates this corpus
-    # (r13 ADVICE adjudication: the concern was already covered).
-    fingerprint = (
-        _base_fingerprint(base_sf_dir, factor, ("events",))
-        + f"|graph:{TS_STRIDE_DAYS}"
-    )
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read() == fingerprint:
-                return out_dir
-    import shutil
 
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
-    for t in TABLES:
-        t_factor = factor if t == "events" else 1
-        est_bytes = _est_scan_bytes(table_path(base_sf_dir, t)) * t_factor
-        n_files = int(max(1, min(512, est_bytes // (32 << 20))))
-        base = load_table(spark, base_sf_dir, t)
-        if n_files > 1:
-            base = base.repartition(n_files)
-        if t == "events" and t_factor > 1:
-            replicas = spark.range(t_factor).select(F.col("id").alias("_replica"))
-            scaled = (
-                base.crossJoin(F.broadcast(replicas))
-                .withColumn("event_id", F.col("event_id") + F.col("_replica") * F.lit(STRIDE))
-                .withColumn("user_id", F.col("user_id") + F.col("_replica") * F.lit(STRIDE))
-                .withColumn(
-                    "ts",
-                    F.timestamp_micros(
-                        F.unix_micros("ts")
-                        + F.col("_replica") * F.lit(TS_STRIDE_DAYS * 86_400_000_000)
-                    ),
-                )
-                .drop("_replica")
+    def shift(base: DataFrame, t: str, t_factor: int) -> DataFrame:
+        if t != "events" or t_factor == 1:
+            return replicate_table(base, t, t_factor)
+        replicas = spark.range(t_factor).select(F.col("id").alias("_replica"))
+        return (
+            base.crossJoin(F.broadcast(replicas))
+            .withColumn("event_id", F.col("event_id") + F.col("_replica") * F.lit(STRIDE))
+            .withColumn("user_id", F.col("user_id") + F.col("_replica") * F.lit(STRIDE))
+            .withColumn(
+                "ts",
+                F.timestamp_micros(
+                    F.unix_micros("ts")
+                    + F.col("_replica") * F.lit(TS_STRIDE_DAYS * 86_400_000_000)
+                ),
             )
-        else:
-            scaled = replicate_table(base, t, t_factor)
-        scaled.write.mode("overwrite").parquet(os.path.join(out_dir, f"{t}.parquet"))
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
+            .drop("_replica")
+        )
+
+    def _build(out: str) -> None:
+        _write_corpus(
+            spark, base_sf_dir, out, lambda t: factor if t == "events" else 1, shift
+        )
+
+    return materialize(
+        spark, f"x{factor}g", base_sf_dir, TABLES, _build, under=_scale_root(out_root)
+    )

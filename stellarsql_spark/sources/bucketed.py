@@ -15,7 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stellarsql_spark.catalog import load_table, table_path
+from stellarsql_spark.artifacts import artifact_name, materialize
+from stellarsql_spark.catalog import load_table
 from stellarsql_spark.functions.exact import cents, sql_csum, sql_dsum
 from stellarsql_spark.registry import register
 
@@ -42,27 +43,12 @@ GROUP BY o_orderstatus
 
 def write_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Persist orders+lineitem bucketed (and sorted) by order key;
-    idempotent per (sf_dir, corpus fingerprint, layout version).
-
-    Same versioned-marker protocol as ensure_custkey_bucketed (r11
-    ADVICE): the catalog-existence check alone would keep serving a
-    stale layout if the corpus regenerated mid-session or a persistent
-    metastore survived a layout-version bump (e.g. the r11
-    1-file-per-bucket rewrite), so the on-disk fingerprint is checked
-    on every call and a marker-valid directory is re-registered
-    metadata-only across sessions instead of rewritten.
-    """
+    returns their catalog names."""
     names: dict[str, str] = {}
-    # repartition by the bucket key first → ONE file per bucket (same
-    # Murmur3 assignment), which both avoids the tiny-files layout and
-    # is the only layout where Spark trusts the per-bucket sortBy
-    # order at read time (many files per bucket forces a re-sort).
-    for t, key, suffix in (
-        ("orders", "o_orderkey", "b"),
-        ("lineitem", "l_orderkey", "b"),
-    ):
+    for t, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
         names[t] = _ensure_bucketed_table(
-            spark, sf_dir, t, key, N_BUCKETS, suffix, sorted_by=key
+            spark, sf_dir, f"{t}_b", (t,), lambda t=t: load_table(spark, sf_dir, t),
+            key, N_BUCKETS, sorted_by=key,
         )
     return names["orders"], names["lineitem"]
 
@@ -70,54 +56,46 @@ def write_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 def _ensure_bucketed_table(
     spark: SparkSession,
     sf_dir: str,
-    table: str,
+    name: str,
+    inputs: tuple[str, ...],
+    source,
     key: str,
     n_buckets: int,
-    suffix: str,
     sorted_by: str | None = None,
 ) -> str:
-    """Shared idempotent bucketed-table builder: fingerprint-marker
-    fast path, build serialized across sessions via the events-layout
-    flock protocol (r12 ADVICE — the inline saveAsTable+marker pair
-    could interleave with another session's, publishing a valid-
-    looking marker over a torn bucket directory), and metadata-only
-    re-registration when the files are valid but this session's
-    catalog has no entry."""
-    import shutil
-    from urllib.parse import urlparse
+    """The one bucketed-table builder: materialize ``source()``
+    bucketed by ``key`` as artifact ``name`` and register it in this
+    session's catalog; returns the catalog name (the root's name).
 
-    from stellarsql_spark.sources.events_layout import _build_serialized, _marker_ok
+    Repartition BY THE BUCKET KEY before the bucketed write:
+    DataFrame hash partitioning and bucket-id assignment use the same
+    Murmur3 hash mod N, so each writer task holds exactly one bucket's
+    rows and emits ONE file — without it, every input partition
+    writes a sliver of every bucket (measured at 1000×: 1024 files
+    averaging 1.8 MiB for orders, 32 tiny files per bucket task to
+    open), and one file per bucket is the only layout where Spark
+    trusts the per-bucket sortBy order at read time.
 
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    name = f"{table}_{suffix}_{tag}"
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    loc = os.path.join(warehouse, name)
-    marker = os.path.join(loc, "_BUCKETS_DONE")
-    fp = _bucket_fingerprint(table_path(sf_dir, table), n_buckets)
-    df = load_table(spark, sf_dir, table)
-    if not _marker_ok(marker, fp):
-        # Catalog hit is NOT sufficient: if the base corpus at sf_dir
-        # was regenerated mid-session the catalog would keep serving
-        # buckets built from the old data, so the on-disk fingerprint
-        # is checked on every call (r8 ADVICE).
-        def _build() -> None:
-            if spark.catalog.tableExists(name):
-                spark.sql(f"DROP TABLE {name}")
-            shutil.rmtree(loc, ignore_errors=True)
-            w = df.repartition(n_buckets, F.col(key)).write.bucketBy(n_buckets, key)
-            if sorted_by:
-                w = w.sortBy(sorted_by)
-            w.mode("overwrite").saveAsTable(name)
+    ``bucketBy`` needs ``saveAsTable``, so the build registers an
+    EXTERNAL table over the build directory and drops it again (the
+    files stay); the published root is then registered metadata-only
+    by ``_recreate_over_location`` — in a fresh session too, where the
+    in-memory catalog has forgotten the table but the files persist."""
+    table = artifact_name(name, sf_dir)
 
-        _build_serialized(loc, marker, fp, _build)
-    if not spark.catalog.tableExists(name):
-        # Valid files on disk (we lost the build race, or a past
-        # session built them) but no entry in this session's
-        # in-memory catalog → metadata-only CREATE over the location.
-        _recreate_over_location(
-            spark, name, df, key, n_buckets, loc, sorted_by=sorted_by
-        )
-    return name
+    def _build(out: str) -> None:
+        # a stale entry from an older build of this artifact
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        w = source().repartition(n_buckets, F.col(key)).write.bucketBy(n_buckets, key)
+        if sorted_by:
+            w = w.sortBy(sorted_by)
+        w.mode("overwrite").option("path", out).saveAsTable(table)
+        spark.sql(f"DROP TABLE {table}")
+
+    root = materialize(spark, name, sf_dir, inputs, _build)
+    if not spark.catalog.tableExists(table):
+        _recreate_over_location(spark, table, key, n_buckets, root, sorted_by)
+    return table
 
 
 def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,26 +129,17 @@ def b_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_CK_BUCKETS = 32
 
 
-def _bucket_fingerprint(src: str, n_buckets: int) -> str:
-    from stellarsql_spark.catalog import content_fingerprint
-
-    # "c1" = coarse-layout version tag (r11): bumping it invalidates
-    # bucket directories written by the pre-r11 many-files-per-bucket
-    # writer so they rebuild 1-file-per-bucket.
-    return f"c1:{content_fingerprint(src)}:{n_buckets}"
-
-
-def _recreate_over_location(spark: SparkSession, name: str, df: DataFrame,
-                            key: str, n_buckets: int, location: str,
+def _recreate_over_location(spark: SparkSession, name: str, key: str,
+                            n_buckets: int, location: str,
                             sorted_by: str | None = None) -> None:
-    """Re-register an existing bucketed directory as a catalog table
-    WITHOUT rewriting the data. The in-memory catalog forgets tables
-    between sessions while the warehouse files persist; re-declaring
-    the same CLUSTERED BY (and SORTED BY, when the writer sortBy'd)
-    spec over the same files restores the bucket metadata — at a
-    GiB-scale corpus this turns a per-session multi-GiB rewrite into a
-    metadata-only CREATE."""
-    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
+    """Register a published bucketed directory as a catalog table
+    WITHOUT rewriting the data: re-declaring the same CLUSTERED BY
+    (and SORTED BY, when the writer sortBy'd) spec over the same files
+    restores the bucket metadata — at a GiB-scale corpus this turns a
+    per-session multi-GiB rewrite into a metadata-only CREATE.  The
+    column list is read from the files' own footer."""
+    schema = spark.read.parquet(location).schema
+    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
     sort_clause = f"SORTED BY ({sorted_by}) " if sorted_by else ""
     spark.sql(
         f"CREATE TABLE {name} ({cols}) USING PARQUET "
@@ -181,23 +150,17 @@ def _recreate_over_location(spark: SparkSession, name: str, df: DataFrame,
 
 def ensure_custkey_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """orders bucketed by o_custkey + customer bucketed by c_custkey
-    (same bucket count → co-partitioned at rest). Idempotent per
-    (sf_dir, corpus mtime); reuses on-disk buckets across sessions.
-
-    Repartition BY THE BUCKET KEY before the bucketed write (inside
-    _ensure_bucketed_table): DataFrame hash partitioning and bucket-id
-    assignment use the same Murmur3 hash mod N, so each writer task
-    holds exactly one bucket's rows and emits ONE file — without it,
-    every input partition writes a sliver of every bucket (measured at
-    1000×: 1024 files averaging 1.8 MiB for orders, 32 tiny files per
-    bucket task to open).  The r11 A/B on the same corpus
-    (engine-interleaved min-of-7): 1-file-per-bucket cut the headline
-    bucketed join from 2.17× to 1.82× DuckDB.  At warehouse scale this
-    is also the small-files rule every lake enforces at ingest."""
+    (same bucket count → co-partitioned at rest); returns their
+    catalog names.  One file per bucket (see _ensure_bucketed_table):
+    the r11 A/B on the same corpus (engine-interleaved min-of-7) cut
+    the headline bucketed join from 2.17× to 1.82× DuckDB with it.
+    At warehouse scale this is also the small-files rule every lake
+    enforces at ingest."""
     names: dict[str, str] = {}
     for t, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
         names[t] = _ensure_bucketed_table(
-            spark, sf_dir, t, key, N_CK_BUCKETS, "ck"
+            spark, sf_dir, f"{t}_ck", (t,), lambda t=t: load_table(spark, sf_dir, t),
+            key, N_CK_BUCKETS,
         )
     return names["orders"], names["customer"]
 
@@ -257,11 +220,11 @@ def b_join_inner_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- served twin of the b_join_inner headline (C254) -----------------
 
 def ensure_join_rollup(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Materialize (once per corpus fingerprint) the serving artifacts
-    of the b_join_inner headline, the same lineage step that closed
-    the tumbling family (events_layout.ensure_hourly_rollup):
+    """Materialize the serving artifacts of the b_join_inner headline,
+    the same lineage step that closed the tumbling family
+    (events_layout.ensure_hourly_rollup):
 
-    ``<warehouse>/join_ck_preagg_<tag>/``  the custkey-level pre-agg
+    ``<warehouse>/join_rollup_<tag>/preagg/``  the custkey-level pre-agg
         (o_custkey, n_orders_p, rev_p) over status-'F' orders — the
         eager-aggregation intermediate b_join_inner computes per
         query, landed at rest.  This is the DELTA-MAINTAINABLE level:
@@ -269,42 +232,19 @@ def ensure_join_rollup(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         and no dim join (b_ts_rollup_incremental's merge pattern /
         b_merge_ivm's refresh), which is why the pipeline maintains
         custkey granularity rather than only the final 25 rows.
-    ``<warehouse>/join_nation_rollup_<tag>/``  the 25-row nationkey
-        rollup derived from it (preagg ⋈ slim customer map → SUM),
-        re-derived whenever the pre-agg changes — dashboards read
-        THIS.
-    ``<warehouse>/nation_names_<tag>/``  the 25-row conformed name
-        dim (n_nationkey, n_name, r_name) = nation ⋈ region.
+    ``.../rollup/``  the 25-row nationkey rollup derived from it
+        (preagg ⋈ slim customer map → SUM), re-derived whenever the
+        pre-agg changes — dashboards read THIS.
+    ``.../names/``  the 25-row conformed name dim (n_nationkey,
+        n_name, r_name) = nation ⋈ region.
 
-    Builds are serialized/idempotent via the same fingerprint-marker +
-    exclusive-lock protocol as the events layout (r8 ADVICE)."""
-    from urllib.parse import urlparse
+    All three parts live under one artifact root, so one rename
+    publishes them together.  Returns (rollup_dir, names_dir)."""
 
-    from stellarsql_spark.sources.events_layout import (
-        _build_serialized,
-        _marker_ok,
-        _published_ok,
-    )
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    preagg_dir = os.path.join(warehouse, f"join_ck_preagg_{tag}")
-    rollup_dir = os.path.join(warehouse, f"join_nation_rollup_{tag}")
-    names_dir = os.path.join(warehouse, f"nation_names_{tag}")
-    marker = os.path.join(rollup_dir, "_ROLLUP_DONE")
-    # the rollup depends on facts AND the dims that map/name keys —
-    # fingerprint all four inputs so regenerating any one rebuilds it
-    fp = ":".join(
-        _bucket_fingerprint(table_path(sf_dir, t), 0)
-        for t in ("orders", "customer", "nation", "region")
-    )
-    # the marker lives in rollup_dir but vouches for all three
-    # published directories (r12 ADVICE)
-    published = (preagg_dir, rollup_dir, names_dir)
-    if _marker_ok(marker, fp) and _published_ok(published):
-        return rollup_dir, names_dir
-
-    def _build() -> None:
+    def _build(out: str) -> None:
+        preagg_dir, rollup_dir, names_dir = (
+            os.path.join(out, p) for p in ("preagg", "rollup", "names")
+        )
         o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
         (
             o.select("o_custkey", cents("o_totalprice").alias("cts"))
@@ -338,8 +278,11 @@ def ensure_join_rollup(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .parquet(names_dir)
         )
 
-    _build_serialized(rollup_dir, marker, fp, _build, published=published)
-    return rollup_dir, names_dir
+    # the rollup depends on facts AND the dims that map/name keys
+    root = materialize(
+        spark, "join_rollup", sf_dir, ("orders", "customer", "nation", "region"), _build
+    )
+    return os.path.join(root, "rollup"), os.path.join(root, "names")
 
 
 @register("b_join_inner_served", oracle=_INNER_BUCKETED_ORACLE,
@@ -383,9 +326,9 @@ def b_join_inner_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ensure_pricing_rollup(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per corpus fingerprint) the serving artifact
-    of the b_agg_groupby flagship — the last headline shape without a
-    served twin (r9 VERDICT next-round #4):
+    """Materialize the serving artifact of the b_agg_groupby flagship —
+    the last headline shape without a served twin (r9 VERDICT
+    next-round #4):
 
     ``<warehouse>/pricing_day_rollup_<tag>/``  the (l_shipdate,
         l_returnflag, l_linestatus)-level partial aggregate of every
@@ -398,23 +341,9 @@ def ensure_pricing_rollup(spark: SparkSession, sf_dir: str) -> str:
         serving time.  The rollup keys on the raw l_shipdate value
         (observed midnight-aligned; keying on the value rather than a
         truncation keeps the cutoff comparison exact by construction
-        even if a corpus ever carried intraday times).
+        even if a corpus ever carried intraday times)."""
 
-    Build is serialized/idempotent via the same fingerprint-marker +
-    exclusive-lock protocol as the other layout artifacts."""
-    from urllib.parse import urlparse
-
-    from stellarsql_spark.sources.events_layout import _build_serialized, _marker_ok
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    rollup_dir = os.path.join(warehouse, f"pricing_day_rollup_{tag}")
-    marker = os.path.join(rollup_dir, "_ROLLUP_DONE")
-    fp = _bucket_fingerprint(table_path(sf_dir, "lineitem"), 0)
-    if _marker_ok(marker, fp):
-        return rollup_dir
-
-    def _build() -> None:
+    def _build(out: str) -> None:
         li = load_table(spark, sf_dir, "lineitem")
         ep, dc, tx, qt = (
             cents(c)
@@ -435,11 +364,10 @@ def ensure_pricing_rollup(spark: SparkSession, sf_dir: str) -> str:
             )
             .coalesce(1)
             .write.mode("overwrite")
-            .parquet(rollup_dir)
+            .parquet(out)
         )
 
-    _build_serialized(rollup_dir, marker, fp, _build)
-    return rollup_dir
+    return materialize(spark, "pricing_day_rollup", sf_dir, ("lineitem",), _build)
 
 
 from stellarsql_spark.operators.aggregates import PRICING_SUMMARY_ORACLE
@@ -543,9 +471,9 @@ def b_topk_per_group_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- served twin of the b_topk_per_group headline (C271) ---------------
 
 def ensure_topk_rollup(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per corpus fingerprint) the per-customer top-3
-    artifact the topk headline computes per query — the serving step
-    that completes the topk family's plain → bucketed → served lineage.
+    """Materialize the per-customer top-3 artifact the topk headline
+    computes per query — the serving step that completes the topk
+    family's plain → bucketed → served lineage.
 
     The artifact stores the FINAL result grain (c_custkey, o_orderkey,
     o_totalprice, rn ≤ 3): unlike the 25-row join rollup, the result
@@ -556,32 +484,14 @@ def ensure_topk_rollup(spark: SparkSession, sf_dir: str) -> str:
     top3(merge(top3(A), top3(B))) == top3(A ∪ B) — new order batches
     fold in at ≤3 rows per touched customer (certified in
     tests/test_round11.py::TestTopkServed::test_merge_property)."""
-    from urllib.parse import urlparse
-
     from stellarsql_spark.operators.sorts import b_topk_per_group
-    from stellarsql_spark.sources.events_layout import _build_serialized, _marker_ok
 
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    out_dir = os.path.join(warehouse, f"topk3_custkey_{tag}")
-    marker = os.path.join(out_dir, "_ROLLUP_DONE")
-    # Builder-version token (r14 ADVICE): the fingerprint previously
-    # covered only the corpus files, so an artifact materialized by an
-    # OLDER builder implementation was silently reused after a kernel
-    # change (results identical — oracle-verified — but the served
-    # bench row measured a stale-format artifact).  Bump the token
-    # whenever the topk kernel changes shape.
-    fp = "bld-r15:" + ":".join(
-        _bucket_fingerprint(table_path(sf_dir, t), 0) for t in ("orders", "customer")
-    )
-    if _marker_ok(marker, fp):
-        return out_dir
+    # The fingerprint covers the topk kernel's code (operators.sorts),
+    # so an artifact built by an older kernel is never served.
+    def _build(out: str) -> None:
+        b_topk_per_group(spark, sf_dir).write.mode("overwrite").parquet(out)
 
-    def _build() -> None:
-        b_topk_per_group(spark, sf_dir).write.mode("overwrite").parquet(out_dir)
-
-    _build_serialized(out_dir, marker, fp, _build)
-    return out_dir
+    return materialize(spark, "topk3_custkey", sf_dir, ("orders", "customer"), _build)
 
 
 @register("b_topk_per_group_served", oracle=_B30_ORACLE,

@@ -44,69 +44,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from stellarsql_spark.catalog import load_table, table_path
+from stellarsql_spark.artifacts import materialize
+from stellarsql_spark.catalog import load_table
 from stellarsql_spark.functions.exact import cents
 from stellarsql_spark.registry import register
 
 US_PER_HOUR = 3_600_000_000
 
-
-def _marker_ok(marker: str, fp: str) -> bool:
-    try:
-        with open(marker) as f:
-            return f.read() == fp
-    except OSError:
-        return False
-
-
-def _published_ok(dirs) -> bool:
-    """True iff every directory a build publishes still holds a
-    completed parquet write (its ``_SUCCESS`` file).  A marker-gated
-    fast path must verify the companion artifacts the marker vouches
-    for, not just the marker's own directory (r12 ADVICE): a companion
-    deleted independently would otherwise pass the marker check and
-    serve a missing directory."""
-    return all(os.path.exists(os.path.join(d, "_SUCCESS")) for d in dirs)
-
-
-def _build_serialized(target_dir: str, marker: str, fp: str, build,
-                      published=()) -> None:
-    """Run ``build()`` (an overwrite-write + marker publish) at most
-    once per fingerprint, serialized across sessions via an exclusive
-    lock file beside the target dir.
-
-    Without this, two sessions materializing the same corpus could
-    interleave their overwrite and marker writes, leaving a marker
-    that describes a partially-overwritten directory.  flock gives
-    single-host mutual exclusion (the sandbox and the bench/driver
-    sessions are single-host); on a real multi-writer lake this job
-    belongs to a transactional table format's commit protocol, not a
-    marker file.  Double-checked: the marker is re-read under the
-    lock so the loser of the race returns the winner's build.
-
-    Known TOCTOU (r13 ADVICE, accepted): callers' marker+published
-    fast paths run OUTSIDE this lock, so a reader could pass the
-    check just before a concurrent rebuild rmtrees a companion dir.
-    The protocol therefore assumes SINGLE-WRITER-per-fingerprint
-    operation — true here by construction, since a build for a given
-    fingerprint only ever happens when that fingerprint has no valid
-    marker yet (rebuilds are triggered by corpus regeneration, which
-    changes the fingerprint and the artifact path's content together,
-    never by overwriting a currently-valid artifact in place).
-    Hardening for a concurrent-invalidation world would take LOCK_SH
-    in the fast path; a real lake gets this from its table format's
-    snapshot isolation."""
-    import fcntl
-
-    lock_path = target_dir.rstrip("/") + ".lock"
-    os.makedirs(os.path.dirname(lock_path) or ".", exist_ok=True)
-    with open(lock_path, "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        if _marker_ok(marker, fp) and _published_ok(published):
-            return
-        build()
-        with open(marker, "w") as f:
-            f.write(fp)
 
 # Identical result contract to b_stream_tumbling
 # (streaming/windows.py) — the twin measures the layout, not a
@@ -121,45 +65,26 @@ GROUP BY 1, 2
 """
 
 
-def _layout_fingerprint(src: str) -> str:
-    from stellarsql_spark.catalog import content_fingerprint
-
-    # v2: day-dir layout (hour dirs A/B'd and rejected, see module doc).
-    # content_fingerprint handles directory corpora correctly (sorted
-    # member listing, not the directory inode — r10 ADVICE).
-    return f"{content_fingerprint(src)}:v2"
-
-
 def ensure_hour_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Materialize (once per corpus) the hour-partitioned events lake:
+    """Materialize (once per fingerprint, see ``artifacts``) the
+    hour-partitioned events lake under one root
+    ``<warehouse>/events_hr_<tag>/``:
 
-    ``<scratch>/events_hr_<tag>/``  facts, hive dirs ``event_day=N/``
-        (days since epoch), one file per day sorted by
-        (event_hour, type_id); all source columns kept (ts included —
-        the layout loses no information) with ``event_type`` replaced
-        by ``type_id`` and ``event_hour`` (epoch-hour BIGINT) and
-        ``cts`` (integer cents) added;
-    ``<scratch>/event_types_<tag>/``  the 5-row type dimension
-        (``type_id``, ``event_type``), ids dense in name order so
-        rebuilds are deterministic.
+    ``facts/``  hive dirs ``event_day=N/`` (days since epoch), one
+        file per day sorted by (event_hour, type_id); all source
+        columns kept (ts included — the layout loses no information)
+        with ``event_type`` replaced by ``type_id`` and ``event_hour``
+        (epoch-hour BIGINT) and ``cts`` (integer cents) added;
+    ``types/``  the 5-row type dimension (``type_id``,
+        ``event_type``), ids dense in name order so rebuilds are
+        deterministic.
 
-    Idempotent per (sf_dir, corpus mtime) via an on-disk fingerprint
-    marker — reused across sessions, rebuilt if the corpus under
-    sf_dir is regenerated.  Plain ``spark.read.parquet`` discovers the
-    hive partitions, so no catalog state is needed (unlike bucketing,
-    which only the session catalog can carry)."""
-    from urllib.parse import urlparse
+    Plain ``spark.read.parquet`` discovers the hive partitions, so no
+    catalog state is needed (unlike bucketing, which only the session
+    catalog can carry).  Returns (facts_dir, types_dir)."""
 
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    fact_dir = os.path.join(warehouse, f"events_hr_{tag}")
-    dim_dir = os.path.join(warehouse, f"event_types_{tag}")
-    marker = os.path.join(fact_dir, "_LAYOUT_DONE")
-    fp = _layout_fingerprint(table_path(sf_dir, "events"))
-    if _marker_ok(marker, fp):
-        return fact_dir, dim_dir
-
-    def _build() -> None:
+    def _build(out: str) -> None:
+        fact_dir, dim_dir = os.path.join(out, "facts"), os.path.join(out, "types")
         e = load_table(spark, sf_dir, "events")
         dim = (
             e.select("event_type")
@@ -195,8 +120,8 @@ def ensure_hour_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         )
         fact.write.mode("overwrite").partitionBy("event_day").parquet(fact_dir)
 
-    _build_serialized(fact_dir, marker, fp, _build)
-    return fact_dir, dim_dir
+    root = materialize(spark, "events_hr", sf_dir, ("events",), _build)
+    return os.path.join(root, "facts"), os.path.join(root, "types")
 
 
 @register("b_stream_tumbling_bucketed", oracle=_TUMBLING_ORACLE,
@@ -258,23 +183,15 @@ def b_stream_tumbling_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Served form: the maintained hourly rollup (C240) ---------------------------------
 
 def ensure_hourly_rollup(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Materialize (once per corpus fingerprint) the hourly rollup
-    TABLE itself: (event_hour, type_id, n_events, sum_cts), ~3.6 k
-    rows.  This is the at-rest aggregate a streaming job maintains
+    """Materialize the hourly rollup TABLE itself:
+    (event_hour, type_id, n_events, sum_cts), ~3.6 k rows, derived
+    from the hour layout (an input, so a layout rebuild rebuilds it).
+    This is the at-rest aggregate a streaming job maintains
     incrementally (b_ts_rollup_incremental's merge pattern /
     foreachBatch upsert); dashboards read THIS, not raw events."""
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    rollup_dir = os.path.join(warehouse, f"events_hourly_{tag}")
-    marker = os.path.join(rollup_dir, "_ROLLUP_DONE")
-    fp = _layout_fingerprint(table_path(sf_dir, "events"))
     fact_dir, dim_dir = ensure_hour_layout(spark, sf_dir)
-    if _marker_ok(marker, fp):
-        return rollup_dir, dim_dir
 
-    def _build() -> None:
+    def _build(out: str) -> None:
         (
             spark.read.parquet(fact_dir)
             .groupBy("event_hour", "type_id")
@@ -284,11 +201,13 @@ def ensure_hourly_rollup(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             )
             .coalesce(1)
             .write.mode("overwrite")
-            .parquet(rollup_dir)
+            .parquet(out)
         )
 
-    _build_serialized(rollup_dir, marker, fp, _build)
-    return rollup_dir, dim_dir
+    root = materialize(
+        spark, "events_hourly", sf_dir, (os.path.dirname(fact_dir),), _build
+    )
+    return root, dim_dir
 
 
 @register("b_stream_tumbling_served", oracle=_TUMBLING_ORACLE,
@@ -301,7 +220,7 @@ def b_stream_tumbling_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     story: at 100 TB the streaming sink maintains this table
     incrementally (foreachBatch upsert, b_stream_exactly_once's
     mechanism) and every dashboard query costs O(hours×types), not
-    O(events).  The corpus-fingerprinted build stands in for the
+    O(events).  The fingerprinted artifact build stands in for the
     incremental maintenance; equality against the from-raw twins is
     the test contract.
 

@@ -29,6 +29,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stellarsql_spark.artifacts import materialize
 from stellarsql_spark.catalog import load_table
 from stellarsql_spark.registry import register
 from stellarsql_spark.streaming.runtime import (
@@ -225,48 +226,33 @@ def _three_file_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write events split by event_id%4 into three single-file parquets
     with forced modification times, so FileStreamSource +
     maxFilesPerTrigger=1 yields exactly three ordered micro-batches.
-    Idempotent per (scratch, sf, corpus version): the done-marker holds
-    a fingerprint of the source events.parquet (size + mtime), so a
-    regenerated corpus at the same path invalidates the cached split
-    instead of silently streaming stale data."""
-    from stellarsql_spark.catalog import table_path
-    from stellarsql_spark.sources.io import SCRATCH_ROOT
+    An artifact (see ``artifacts``): a regenerated corpus at the same
+    path rebuilds the split instead of silently streaming stale data."""
 
-    src_stat = os.stat(table_path(sf_dir, "events"))
-    fingerprint = f"{src_stat.st_size}:{src_stat.st_mtime_ns}"
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    d = os.path.join(SCRATCH_ROOT, f"late_drop3{tag}")
-    done = os.path.join(d, "_SPLIT_DONE")
-    if os.path.exists(done):
-        with open(done) as f:
-            if f.read() == fingerprint:
-                return d
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.unix_micros(F.col("ts"))  # keep BIGINT micros: EVENTS_DDL schema
-    )
-    splits = (
-        (F.col("event_id") % 4).isin(0, 2),
-        F.col("event_id") % 4 == 1,
-        F.col("event_id") % 4 == 3,
-    )
-    for idx, pred in enumerate(splits):
-        part_dir = os.path.join(d, f"_part{idx}")
-        ev.where(pred).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        src = next(
-            os.path.join(part_dir, f)
-            for f in os.listdir(part_dir)
-            if f.endswith(".parquet")
+    def _build(d: str) -> None:
+        ev = load_table(spark, sf_dir, "events").withColumn(
+            "ts", F.unix_micros(F.col("ts"))  # keep BIGINT micros: EVENTS_DDL schema
         )
-        dst = os.path.join(d, f"batch{idx}.parquet")
-        shutil.move(src, dst)
-        shutil.rmtree(part_dir, ignore_errors=True)
-        t = 1_600_000_000 + idx * 1000  # strictly increasing mtimes
-        os.utime(dst, (t, t))
-    with open(done, "w") as f:
-        f.write(fingerprint)
-    return d
+        splits = (
+            (F.col("event_id") % 4).isin(0, 2),
+            F.col("event_id") % 4 == 1,
+            F.col("event_id") % 4 == 3,
+        )
+        for idx, pred in enumerate(splits):
+            part_dir = os.path.join(d, f"_part{idx}")
+            ev.where(pred).coalesce(1).write.mode("overwrite").parquet(part_dir)
+            src = next(
+                os.path.join(part_dir, f)
+                for f in os.listdir(part_dir)
+                if f.endswith(".parquet")
+            )
+            dst = os.path.join(d, f"batch{idx}.parquet")
+            shutil.move(src, dst)
+            shutil.rmtree(part_dir, ignore_errors=True)
+            t = 1_600_000_000 + idx * 1000  # strictly increasing mtimes
+            os.utime(dst, (t, t))
+
+    return materialize(spark, "late_drop3", sf_dir, ("events",), _build)
 
 
 @register("b_stream_late_drop", oracle=_LATE_DROP_ORACLE, tags=("streaming", "runtime", "watermark"))
@@ -408,9 +394,8 @@ def b_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion, then reads the aggregation STATE back through
     ``spark.read.format("statestore")`` — key struct, value struct,
     and shard assignment — and the decoded state must equal the batch
-    GROUP BY (every key in exactly one store shard).  Idempotent per
-    corpus via the same fingerprint discipline as the late-drop split
-    dir."""
+    GROUP BY (every key in exactly one store shard).  The checkpoint is
+    reused within one session only (see the marker comment below)."""
     from stellarsql_spark.catalog import table_path
     from stellarsql_spark.sources.io import SCRATCH_ROOT
 
@@ -420,6 +405,10 @@ def b_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     # StateStoreCoordinator RPC endpoint, which exists only once a
     # streaming query has run in THIS session — a checkpoint inherited
     # from a previous session must be rebuilt, not just re-read.
+    # That makes this checkpoint session-scoped, not a reusable
+    # artifact, so it keeps its own marker instead of going through
+    # artifacts.materialize (the one exception the structural test in
+    # tests/test_artifacts.py allows).
     fingerprint = (
         f"{spark.sparkContext.applicationId}:"
         f"{src_stat.st_size}:{src_stat.st_mtime_ns}"
@@ -813,27 +802,11 @@ def b_stream_run_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _multibatch_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     import glob
 
-    from stellarsql_spark.catalog import content_fingerprint, table_path
-    from stellarsql_spark.sources.events_layout import _build_serialized, _marker_ok
-    from stellarsql_spark.sources.io import SCRATCH_ROOT
+    from stellarsql_spark.catalog import table_path
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    d = os.path.join(SCRATCH_ROOT, f"stream_events_mb{tag}")
-    marker = os.path.join(d, "_MB_DONE")
-    src = table_path(sf_dir, "events")
-    # st only seeds the strictly-increasing utime base below; the
-    # rebuild marker keys on the content listing (file corpora: size +
-    # mtime; directory corpora: sorted member-file listing, so an
-    # in-place rewrite of a same-named part file invalidates it too)
-    st = os.stat(src)
-    # :v2 = the second-granular mtime spacing below (the ns-spaced v1
-    # splits tied within one JVM millisecond and streamed in arbitrary
-    # listing order — caught by the r11 engine-drain window fuzz)
-    fp = f"{content_fingerprint(src)}:{n_files}:v2"
-    if _marker_ok(marker, fp):
-        return d
-
-    def _build() -> None:
+    def _build(d: str) -> None:
+        # st only seeds the strictly-increasing utime base below
+        st = os.stat(table_path(sf_dir, "events"))
         ev = load_table(spark, sf_dir, "events")
         lo, hi = ev.agg(
             F.unix_micros(F.min("ts")), F.unix_micros(F.max("ts"))
@@ -862,8 +835,7 @@ def _multibatch_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
             t_ns = st.st_mtime_ns + (i + 1) * 1_000_000_000
             os.utime(dst, ns=(t_ns, t_ns))
 
-    _build_serialized(d, marker, fp, _build)
-    return d
+    return materialize(spark, f"stream_events_mb{n_files}", sf_dir, ("events",), _build)
 
 
 @register(

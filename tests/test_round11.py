@@ -148,7 +148,7 @@ class TestAdviceHardenings:
         """For a plain file the fingerprint must keep the historical
         `path:size:mtime_ns` format — derived-layout caches key on it,
         and a format change would force full rebuilds."""
-        from stellarsql_spark.catalog import content_fingerprint
+        from stellarsql_spark.artifacts import content_fingerprint
 
         p = tmp_path / "t.parquet"
         p.write_bytes(b"x" * 10)
@@ -183,7 +183,7 @@ class TestAdviceHardenings:
         """For a directory corpus, rewriting a same-named member file
         in place must change the fingerprint even when the directory
         inode's own size/mtime is restored (r10 ADVICE)."""
-        from stellarsql_spark.catalog import content_fingerprint
+        from stellarsql_spark.artifacts import content_fingerprint
 
         d = tmp_path / "events.parquet"
         d.mkdir()

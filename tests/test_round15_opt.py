@@ -249,23 +249,50 @@ class TestBenchTrialShed:
     record the cut."""
 
     NAMES = ["b_agg_groupby", "b_win_running_sum"]
+    RUNS = 3
 
     def _run(self, spark, monkeypatch, deadline, elapsed):
+        """Run the harness with ``_budget_elapsed`` replaced by
+        ``elapsed(counts)`` and every prepared query wrapped so its
+        executions (warm + timed) are counted per key."""
         import bench
 
-        monkeypatch.setattr(bench, "_budget_elapsed", lambda: elapsed)
+        counts: dict[str, int] = {}
+        real_prepare = bench.prepare
+
+        def counting_prepare(spec, *args):
+            sfn = real_prepare(spec, *args)
+            counts[spec.name] = 0
+
+            def run():
+                counts[spec.name] += 1
+                return sfn()
+
+            return run
+
+        monkeypatch.setattr(bench, "prepare", counting_prepare)
+        monkeypatch.setattr(bench, "_budget_elapsed", lambda: elapsed(counts))
         from stellarsql_spark.registry import all_specs
 
-        return bench._interleaved_times(
-            spark, SF_SMALL, all_specs(), self.NAMES, runs=3,
+        out = bench._interleaved_times(
+            spark, SF_SMALL, all_specs(), self.NAMES, runs=self.RUNS,
             deadline=deadline,
         )
+        return out, counts
+
+    def _full_count(self, best: float) -> int:
+        """warm + runs, plus the sub-second extension whenever the
+        key's min ends below 1 s (the harness extends at the first
+        trial that takes the min below 1 s)."""
+        import bench
+
+        return 1 + self.RUNS + (bench._SUBSEC_EXTRA if best < 1.0 else 0)
 
     def test_past_deadline_sheds_but_reports_every_key(
         self, spark, monkeypatch
     ):
-        s, d, spread, resettled, shed = self._run(
-            spark, monkeypatch, deadline=100.0, elapsed=200.0
+        (s, d, spread, resettled, shed), counts = self._run(
+            spark, monkeypatch, deadline=100.0, elapsed=lambda counts: 200.0
         )
         # every remaining query was cut AFTER its first paired trial
         assert shed == self.NAMES
@@ -274,14 +301,31 @@ class TestBenchTrialShed:
             assert 0.0 < s[n] < float("inf")   # min-of-1 still reported
             assert spread[n] == 0.0            # exactly one timed trial
             assert 0.0 < d[n] < float("inf")   # the paired duck trial ran
+            assert counts[n] == 2              # warm + that one trial
 
     def test_no_deadline_keeps_full_trial_counts(self, spark, monkeypatch):
-        s, d, spread, resettled, shed = self._run(
-            spark, monkeypatch, deadline=None, elapsed=200.0
+        (s, d, spread, resettled, shed), counts = self._run(
+            spark, monkeypatch, deadline=None, elapsed=lambda counts: 200.0
         )
         assert shed == []                      # deadline off → no cut
         for n in self.NAMES:
             assert 0.0 < s[n] < float("inf")
+            assert counts[n] == self._full_count(s[n])
+
+    def test_deadline_crossed_between_keys(self, spark, monkeypatch):
+        """The clock passes the deadline once the second key starts:
+        the first key keeps its full trial count, the second is shed
+        after its first paired trial."""
+        first, second = self.NAMES
+        (s, d, spread, resettled, shed), counts = self._run(
+            spark, monkeypatch, deadline=100.0,
+            elapsed=lambda counts: 200.0 if second in counts else 0.0,
+        )
+        assert shed == [second]
+        assert counts[first] == self._full_count(s[first])
+        assert counts[second] == 2
+        assert spread[second] == 0.0
+        assert 0.0 < s[second] < float("inf") and 0.0 < d[second] < float("inf")
 
     def test_compact_line_carries_ts(self):
         import bench

@@ -40,18 +40,6 @@ class TestBucketedJoinInner:
         b = {tuple(r) for r in b_join_inner_bucketed(spark, SF_MED).collect()}
         assert a == b and len(a) > 0
 
-    def test_bucket_reuse_is_metadata_only(self, spark):
-        """Second ensure within a session is a catalog no-op; the
-        on-disk fingerprint marker survives for cross-session reuse."""
-        from urllib.parse import urlparse
-
-        from stellarsql_spark.sources.bucketed import ensure_custkey_bucketed
-
-        to, tc = ensure_custkey_bucketed(spark, SF_MED)
-        assert (to, tc) == ensure_custkey_bucketed(spark, SF_MED)
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        assert os.path.exists(os.path.join(warehouse, to, "_BUCKETS_DONE"))
-
 
 class TestArtifactSyncGuards:
     def test_plans_md_covers_registry(self):

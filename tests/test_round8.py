@@ -55,17 +55,6 @@ class TestTumblingLayoutTwin:
         assert len(shuffles) == 1, plan
         assert "BroadcastExchange" in plan
 
-    def test_layout_reuse_is_marker_gated(self, spark):
-        """Second ensure is a no-op via the fingerprint marker, so
-        cross-session calls never rewrite the lake."""
-        from stellarsql_spark.sources.events_layout import ensure_hour_layout
-
-        fact1, dim1 = ensure_hour_layout(spark, SF_MED)
-        mtime = os.path.getmtime(os.path.join(fact1, "_LAYOUT_DONE"))
-        fact2, dim2 = ensure_hour_layout(spark, SF_MED)
-        assert (fact1, dim1) == (fact2, dim2)
-        assert os.path.getmtime(os.path.join(fact1, "_LAYOUT_DONE")) == mtime
-
     def test_one_file_per_day_dir(self, spark):
         """partition-coarse/sort-fine: each hive day dir holds exactly
         one data file (the 300× A/B that killed hour dirs was about

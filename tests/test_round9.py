@@ -34,6 +34,7 @@ class TestJoinServed:
         from stellarsql_spark.sources.bucketed import (
             b_join_inner_bucketed,
             b_join_inner_served,
+            ensure_join_rollup,
         )
 
         key = lambda r: (r.r_name, r.n_name)
@@ -49,7 +50,8 @@ class TestJoinServed:
         df = b_join_inner_served(spark, SF)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "join_nation_rollup_" in plan and "nation_names_" in plan
+        rollup_dir, names_dir = ensure_join_rollup(spark, SF)
+        assert rollup_dir in plan and names_dir in plan
         for raw in ("orders.parquet", "customer.parquet",
                     "nation.parquet", "region.parquet"):
             assert raw not in plan
@@ -63,7 +65,7 @@ class TestJoinServed:
         rollup_dir, names_dir = ensure_join_rollup(spark, SF)
         assert spark.read.parquet(rollup_dir).count() == 25
         assert spark.read.parquet(names_dir).count() == 25
-        preagg_dir = rollup_dir.replace("join_nation_rollup_", "join_ck_preagg_")
+        preagg_dir = os.path.join(os.path.dirname(rollup_dir), "preagg")
         pre = spark.read.parquet(preagg_dir)
         assert set(pre.columns) == {"o_custkey", "n_orders_p", "rev_p"}
         # conservation: the pre-agg re-aggregates to the same totals

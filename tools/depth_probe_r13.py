@@ -165,7 +165,7 @@ def main() -> None:
 
         tag = "".join(ch if ch.isalnum() else "_" for ch in d.rstrip("/")).strip("_")
         warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for prefix in ("pq_codes_", "pq_codebook_", "ivfpq_cents_", "ivfpq_codes_"):
+        for prefix in ("pq_", "ivfpq_"):
             shutil.rmtree(os.path.join(warehouse, f"{prefix}{tag}"),
                           ignore_errors=True)
         t0 = time.perf_counter()
@@ -187,7 +187,7 @@ def main() -> None:
 
         tag = "".join(ch if ch.isalnum() else "_" for ch in d.rstrip("/")).strip("_")
         warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for prefix in ("ivfpqr_codebook_", "ivfpqr_codes_"):
+        for prefix in ("ivfpqr_",):
             shutil.rmtree(os.path.join(warehouse, f"{prefix}{tag}"),
                           ignore_errors=True)
         t0 = time.perf_counter()
