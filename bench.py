@@ -344,7 +344,10 @@ def _interleaved_times(spark, scaled_dir, specs, names, runs: int,
     run where block N+1's guard was met — every committed clean run,
     and the r14 driver run — block N finished before that guard by
     definition, so the deadline never fires and the min-of counts are
-    byte-identical to r14's methodology."""
+    byte-identical to r14's methodology.  The shed is not a hard stop:
+    past the deadline each of the K keys still left pays its warm run
+    plus one paired trial, so a block can overrun its deadline by at
+    most K × (warm + pair)."""
     import duckdb
 
     from stellarsql_spark.catalog import TABLES, table_path
@@ -463,9 +466,9 @@ def _stream_throughput(spark, sf_dir: str, factor: int) -> dict:
     over the ``factor``× events corpus: file source, maxFilesPerTrigger
     =1 (each of the ~6 corpus files is one micro-batch incrementally
     updating (window, type) state), memory sink, synchronous drain.
-    State is bounded by hours×types (~3.6k rows across 32 state-store
-    partitions), NOT by input rows — see SCALE.md round-8 for the
-    sizing arithmetic."""
+    State is bounded by hours×types (~3.6k rows across one state-store
+    partition per core, see runtime.state_width), NOT by input rows —
+    see SCALE.md round-8 for the sizing arithmetic."""
     from stellarsql_spark.catalog import load_table, table_path
     from stellarsql_spark.scale import ensure_scaled_corpus
     from stellarsql_spark.streaming.runtime import (

@@ -36,6 +36,7 @@ from stellarsql_spark.streaming.runtime import (
     EVENTS_DDL,
     events_stream,
     run_to_memory,
+    state_width,
     stream_static_join,
     stream_stream_join,
 )
@@ -425,17 +426,18 @@ def b_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(base, exist_ok=True)
         counted = events_stream(spark, sf_dir).groupBy("user_id").count()
-        q = (
-            counted.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(f"state_reader_{abs(hash(fingerprint)) % 10**8}")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        with state_width(spark):
+            q = (
+                counted.writeStream.outputMode("update")
+                .format("memory")
+                .queryName(f"state_reader_{abs(hash(fingerprint)) % 10**8}")
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
         with open(done, "w") as f:
             f.write(fingerprint)
     state = spark.read.format("statestore").load(ckpt)
@@ -703,10 +705,8 @@ def b_stream_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = events_stream(spark, sf_dir)
     counts = ev.groupBy("event_type").agg(F.count("*").alias("n"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     name = f"progress_{_uuid.uuid4().hex[:12]}"
-    try:
+    with state_width(spark):
         q = (
             counts.writeStream.outputMode("complete")
             .format("memory")
@@ -718,11 +718,6 @@ def b_stream_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
             progress = q.recentProgress
         finally:
             q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     input_rows = sum(p["numInputRows"] for p in progress)
     state_rows = max(
         (op["numRowsTotal"] for p in progress for op in p.get("stateOperators", [])),
@@ -912,8 +907,6 @@ def b_stream_restart_recovery(
     ckpt = os.path.join(work, "ckpt")
     os.makedirs(src_dir)
     sink = f"restart_sink_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     def _stage(names) -> None:
         # hardlinks share the quartile files' pinned strictly-increasing
@@ -929,17 +922,18 @@ def b_stream_restart_recovery(
             max_files_per_trigger=1,
         )
         streamed = tumbling_hourly(src.withWatermark("ts", "2 hours"))
-        q = (
-            streamed.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        with state_width(spark):
+            q = (
+                streamed.writeStream.outputMode("complete")
+                .format("memory")
+                .queryName(sink)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
 
     try:
         _stage(files[:2])
@@ -954,10 +948,6 @@ def b_stream_restart_recovery(
         # depend on the checkpoint, so the finally's rmtree is safe
         return spark.table(sink)
     finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(work, ignore_errors=True)
 
 
@@ -1026,8 +1016,6 @@ def b_stream_concurrent(
     ckpt_a, ckpt_b = os.path.join(work, "ckpt_a"), os.path.join(work, "ckpt_b")
     sink_a = f"conc_tumbling_{uuid.uuid4().hex[:8]}"
     sink_b = f"conc_peruser_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     def _start(df, sink, ckpt):
         return (
@@ -1043,15 +1031,16 @@ def b_stream_concurrent(
     )
     qa = qb = None
     try:
-        qa = _start(tumbling_hourly(src.withWatermark("ts", "2 hours")), sink_a, ckpt_a)
-        qb = _start(
-            src.groupBy("user_id").agg(F.count("*").alias("n_events")),
-            sink_b,
-            ckpt_b,
-        )
-        # both queries are live before either drain begins
-        qa.processAllAvailable()
-        qb.processAllAvailable()
+        with state_width(spark):
+            qa = _start(tumbling_hourly(src.withWatermark("ts", "2 hours")), sink_a, ckpt_a)
+            qb = _start(
+                src.groupBy("user_id").agg(F.count("*").alias("n_events")),
+                sink_b,
+                ckpt_b,
+            )
+            # both queries are live before either drain begins
+            qa.processAllAvailable()
+            qb.processAllAvailable()
         if _probe is not None:
             _probe(ckpt_a, ckpt_b)
         a = spark.table(sink_a).select(
@@ -1073,8 +1062,4 @@ def b_stream_concurrent(
         for q in (qa, qb):
             if q is not None:
                 q.stop()
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(work, ignore_errors=True)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,21 +87,39 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@contextmanager
+def state_width(spark: SparkSession):
+    """Hold ``spark.sql.shuffle.partitions`` at one state partition per
+    core (``defaultParallelism``) while a stateful query starts and
+    drains, then put back the caller's value.
+
+    A query's state-store partition count is fixed by this conf when
+    its checkpoint is first written (the offset log records it, so a
+    restart from an existing checkpoint keeps the old width). Each
+    partition pays its own state commit per micro-batch (~70-110 ms
+    on a 4-core host), so a width above the core count buys queueing,
+    not parallelism: 32 partitions on 4 cores made a batch cost
+    1.4-3 s for 720 state rows. The width still grows with the cluster, which
+    a constant would not. Restoring the caller's value keeps batch
+    plans built later from depending on whether a streaming query ran
+    first in the session."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
+    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.shuffle.partitions")
+        else:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drain a streaming DataFrame synchronously into a memory sink and
     return the sink contents as a batch DataFrame."""
-    # State-store partition count is fixed at the first checkpoint by
-    # shuffle.partitions; a vanilla 200 costs ~5-45s per drain on
-    # local test data. 32 matches the engine session default and the
-    # local core count. The previous value is RESTORED after the drain
-    # so batch plans built later don't inherit a streaming-sized
-    # shuffle count (plan shapes must not depend on whether a
-    # streaming key ran first in the session).
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    try:
+    with state_width(spark):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -111,12 +130,7 @@ def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFr
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return stream_df.sparkSession.table(name)
+    return spark.table(name)
 
 
 def tumbling_with_watermark(spark: SparkSession, sf_dir: str, watermark: str = "2 hours") -> DataFrame:
@@ -463,33 +477,53 @@ def sustained_rate_drain(
     (socket_stream's note).  Uses update mode + processing-time
     trigger — the perpetual-query deployment shape, unlike the
     processAllAvailable() drains used for result parity."""
+    return _sustained_metrics(
+        rate_stream(spark, rows_per_second), "rate_drain",
+        window, watermark, min_batches, trigger_ms, timeout_s,
+    )
+
+
+def _sustained_metrics(
+    src: DataFrame,
+    prefix: str,
+    window: str,
+    watermark: str,
+    min_batches: int,
+    trigger_ms: int,
+    timeout_s: float,
+    on_stop=lambda: None,
+) -> list[dict]:
+    """Run the watermarked tumbling aggregate over ``src`` in update
+    mode on a processing-time trigger until it has made
+    ``min_batches`` non-empty micro-batches (or ``timeout_s`` passes),
+    call ``on_stop``, stop it, and return each non-empty batch's ops
+    metrics."""
     import time
-    import uuid as _uuid
 
     agg = (
-        rate_stream(spark, rows_per_second)
-        .withWatermark("ts", watermark)
+        src.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window), "event_type")
         .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
     )
-    name = f"rate_drain_{_uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            nonempty = [p for p in q.recentProgress if p["numInputRows"] > 0]
-            if len(nonempty) >= min_batches:
-                break
-            time.sleep(0.25)
-        progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    finally:
-        q.stop()
+    with state_width(src.sparkSession):
+        q = (
+            agg.writeStream.outputMode("update")
+            .format("memory")
+            .queryName(f"{prefix}_{uuid.uuid4().hex[:12]}")
+            .trigger(processingTime=f"{trigger_ms} milliseconds")
+            .start()
+        )
+        try:
+            deadline = time.time() + timeout_s
+            while time.time() < deadline:
+                nonempty = [p for p in q.recentProgress if p["numInputRows"] > 0]
+                if len(nonempty) >= min_batches:
+                    break
+                time.sleep(0.25)
+            progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        finally:
+            on_stop()
+            q.stop()
     return [
         {
             "batch_id": p["batchId"],
@@ -542,7 +576,6 @@ def sustained_socket_drain(
     import socket as pysocket
     import threading
     import time
-    import uuid as _uuid
 
     base_us = 1_700_000_000_000_000
     etypes = ("view", "click", "purchase")
@@ -592,41 +625,9 @@ def sustained_socket_drain(
     if not ready.wait(timeout=10) or not ports:
         return []  # feeder failed to bind; caller treats [] as skip
 
-    agg = (
-        socket_stream(spark, "127.0.0.1", ports[0])
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
+    metrics = _sustained_metrics(
+        socket_stream(spark, "127.0.0.1", ports[0]), "socket_drain",
+        window, watermark, min_batches, trigger_ms, timeout_s, on_stop=done.set,
     )
-    name = f"socket_drain_{_uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            nonempty = [p for p in q.recentProgress if p["numInputRows"] > 0]
-            if len(nonempty) >= min_batches:
-                break
-            time.sleep(0.25)
-        progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    finally:
-        done.set()
-        q.stop()
     feeder.join(timeout=10)
-    return [
-        {
-            "batch_id": p["batchId"],
-            "input_rows": p["numInputRows"],
-            "duration_ms": p["batchDuration"],
-            "state_rows": sum(
-                op["numRowsTotal"] for op in p.get("stateOperators", [])
-            ),
-            "trigger_ms": trigger_ms,
-        }
-        for p in progress
-    ]
+    return metrics

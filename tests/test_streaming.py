@@ -183,6 +183,87 @@ def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def test_state_width_is_one_partition_per_core(spark, sf_dir):
+    """A watermarked tumbling drain gets one state partition per core,
+    whatever width the session held before it started."""
+    import json
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    progress: list[dict] = []
+
+    class _Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            progress.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    cores = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    listener = _Listener()
+    spark.streams.addListener(listener)
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(2 * cores + 1))
+        runtime.run_to_memory(
+            runtime.tumbling_with_watermark(spark, sf_dir), output_mode="append"
+        )
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    widths = [op["numShufflePartitions"] for p in progress for op in p["stateOperators"]]
+    assert widths and set(widths) == {cores}
+
+
+# Modules under stellarsql_spark/streaming/ allowed to write the width,
+# by (file, enclosing function): the helper itself, and the batch-form
+# session clone that sizes a plain aggregate's reducers.
+_WIDTH_WRITERS = {("runtime.py", "state_width"), ("windows.py", "b_stream_tumbling")}
+
+
+def _width_writes(node, fn="<module>"):
+    """(innermost enclosing function, line) of every call that sets,
+    unsets or configures spark.sql.shuffle.partitions under ``node``."""
+    import ast
+
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        fn = node.name
+    if (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("set", "unset", "config")
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value == "spark.sql.shuffle.partitions"
+    ):
+        yield fn, node.lineno
+    for child in ast.iter_child_nodes(node):
+        yield from _width_writes(child, fn)
+
+
+def test_state_width_is_set_in_one_place():
+    """No code under stellarsql_spark/streaming/ writes
+    spark.sql.shuffle.partitions except through runtime.state_width."""
+    import ast
+    import os
+
+    pkg = os.path.dirname(runtime.__file__)
+    bad = []
+    for f in sorted(os.listdir(pkg)):
+        if f.endswith(".py"):
+            with open(os.path.join(pkg, f)) as fh:
+                tree = ast.parse(fh.read())
+            bad += [(f, fn, line) for fn, line in _width_writes(tree) if (f, fn) not in _WIDTH_WRITERS]
+    assert bad == []
+
+
 def test_transform_with_state_matches_batch(spark, sf_dir):
     """Spark 4 transformWithStateInPandas: final per-user counts after
     draining the stream must equal the batch groupBy count.
